@@ -94,12 +94,3 @@ def dedup_keep_first_and_last(
         *key_cols,
         *[F.col(f"_leg._p.{c}").alias(c) for c in payload_cols],
     )
-
-
-def latest_state(df: DataFrame, key_cols: list[str], ts_col: str = "ts") -> DataFrame:
-    """R1 batch analog — latest row per key (snapshot view).
-
-    Reference realtime snapshots (v2.py:456-524) return the current state of
-    every contract; over a history table that is keep-last-by-timestamp.
-    """
-    return dedup_keep_last(df, key_cols, [ts_col])

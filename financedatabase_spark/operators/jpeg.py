@@ -903,13 +903,6 @@ def synth_jpeg12(doc_id: int) -> bytes:
     return assemble_jpeg(w, JPEG_H, qt, blocks, sof1=True, prec=12)
 
 
-def jpeg_decode_deep(payload: bytes, dim: int = 8) -> list[float]:
-    """Deprecated alias: `jpeg_decode` is precision-aware now (it reads
-    the frame precision from `jpeg_frame`), so deep frames bin
-    correctly through the main entry point."""
-    return jpeg_decode(payload, dim)
-
-
 def synth_jpeg_lossless(doc_id: int, prec: int = 8) -> bytes:
     """Deterministic SOF3 fixture: width 16/24/32 by doc%3, height 16,
     predictor 1 + doc%7 (all seven Annex H predictors across the

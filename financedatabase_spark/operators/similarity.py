@@ -116,13 +116,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_n(a: Column, b: Column, n: int) -> Column:
-    """`cosine` with a statically known length (see `dot_n`): identical
-    doubles — dot / (norm_a * norm_b) with each term summed in the same
-    order as the fold form."""
-    return dot_n(a, b, n) / (l2_norm_n(a, n) * l2_norm_n(b, n))
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1007,42 +1000,6 @@ def pq_codebooks(centroids: DataFrame, m: int, dim: int) -> DataFrame:
     ).select(F.col("_sc.sub").alias("sub"), "cid", F.col("_sc.cvec_sub").alias("cvec_sub"))
 
 
-def residual_anchor_codebook_rows(
-    anchor_rows: list, centroid_rows: list, m: int, dim: int
-) -> list[dict]:
-    """(sub, cid, cvec_sub) codebook rows for residual-anchor PQ, computed
-    DRIVER-SIDE from already-collected raws — the composition of
-    `residual_vectors` + `pq_codebooks` + the collect inside `ivf_pq_topk`,
-    without the extra Spark job those cost when the anchors are a handful
-    of rows (r16). Bit-exact by construction: the residual is one IEEE-754
-    binary64 subtraction per element (identical in CPython and the JVM),
-    the slices copy values untouched, and the values flow into the same
-    literal renderers (`_darr` shortest-exact repr) the collected path
-    feeds. Pinned by test_residual_anchor_codebook_rows_match_frame.
-
-    ``anchor_rows``: (cid, cell, vec) per anchor (vec already double).
-    Raises on a missing centroid — the same loud contract as
-    `residual_vectors`' raise_error."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    d = dim // m
-    cmap = {r["cell"]: r["cvec"] for r in centroid_rows}
-    out: list[dict] = []
-    for a in anchor_rows:
-        if a["cell"] is None or a["cell"] not in cmap:
-            raise ValueError(
-                f"residual_anchor_codebook_rows: no centroid for cell "
-                f"{a['cell']!r} — centroid frame does not cover the assignment"
-            )
-        cvec = cmap[a["cell"]]
-        remb = [x - c for x, c in zip(a["vec"], cvec)]
-        for s in range(m):
-            out.append(
-                {"sub": s, "cid": a["cid"], "cvec_sub": remb[s * d : s * d + d]}
-            )
-    return out
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: DataFrame,
@@ -1247,7 +1204,6 @@ def ivf_pq_topk(
     residuals: bool = False,
     rerank: int | None = None,
     centroid_rows: list | None = None,
-    codebook_rows: list | None = None,
 ) -> DataFrame:
     """IVF-PQ approximate nearest neighbors — the standard 100 TB ANN
     layout (Jégou et al. 2011): the corpus is stored as m-subspace PQ
@@ -1305,16 +1261,10 @@ def ivf_pq_topk(
     else:
         enc_corpus = corpus
     # one collect of the tiny codebook serves both literal builders
-    # (the encode map and the ADC map) — one job instead of two; callers
-    # that can derive the rows driver-side (residual_anchor_codebook_rows)
-    # pass them in and the job disappears entirely (r16)
+    # (the encode map and the ADC map) — one job instead of two
     _cb_dts = dict(cbs.dtypes)
-    cb_rows = codebook_rows
-    if (
-        cb_rows is None
-        and _cb_dts.get("sub") in _LIT_KEY_TYPES
-        and _cb_dts.get("cid") in _LIT_KEY_TYPES
-    ):
+    cb_rows = None
+    if _cb_dts.get("sub") in _LIT_KEY_TYPES and _cb_dts.get("cid") in _LIT_KEY_TYPES:
         cb_rows = cbs.select("sub", "cid", "cvec_sub").collect()
     codes = pq_encode(
         enc_corpus, cbs, m, dim, id_col=corpus_id, vec_col=vec_col,

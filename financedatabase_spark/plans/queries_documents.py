@@ -8,7 +8,9 @@ bit math uses div/mod; regex classes are the RE2∩Java common subset.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable, Iterator
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from financedatabase_spark.operators import dedup_docs as dd
@@ -667,6 +669,42 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _synth_decode_features(
+    spark: SparkSession,
+    sf_dir: str,
+    synth: Callable[[int], bytes],
+    media_type: str,
+    label: str | Column,
+    names: tuple[str, str],
+) -> DataFrame:
+    """Shared body of the synthesized-media feature queries: each doc_id
+    gets the deterministic payload ``synth(doc_id)`` tagged ``media_type``,
+    `dispatch_decode` turns it into the 8-slot feature vector, and the
+    vector is exploded to scalar rows (doc_id, ``label``, *``names``) so
+    the result schema carries no array columns (hash-canonicalizable).
+
+    Scale shape: scan → mapInPandas synth → mapInPandas decode →
+    posexplode; one id-only shuffle (spread_ids) before synth so decode
+    parallelizes — payloads themselves never shuffle."""
+    import pandas as _pd
+
+    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
+
+    def gen(batches: Iterator[_pd.DataFrame]) -> Iterator[_pd.DataFrame]:
+        for pdf in batches:
+            yield _pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": pdf["doc_id"].map(lambda i: synth(int(i))),
+                    "media_type": media_type,
+                }
+            )
+
+    media = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
+    feats = decode_features(media, decode_fn=dispatch_decode, pass_media_type=True)
+    return feats.select("doc_id", label, F.posexplode("feature").alias(*names))
+
+
 @register(
     "multimodal_audio_features",
     oracle="""
@@ -727,29 +765,9 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames at the declared width, and emit 8 windowed |amplitude| sums.
     The oracle recomputes the features from doc_id by the per-variant
     formula — and checks the container round-trip via n_bytes = header
-    + frame bytes (2n / 4n / n / 3n / 4n / 4n / n by variant).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_wav(int(i))),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
+    + frame bytes (2n / 4n / n / 3n / 4n / 4n / n by variant)."""
+    return _synth_decode_features(
+        spark, sf_dir, synth_wav, "audio/wav", "n_bytes", ("win", "abs_sum")
     )
 
 
@@ -824,35 +842,14 @@ def multimodal_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     variants from doc_id by integer formula (the MJPEG fixtures' u=4
     ripple sums to zero per block row, leaving the DC base values) — and
     checks both container round-trips via n_bytes: 224 + 776/frame for
-    DIB, 224 + 520/frame for MJPEG (frames padded to MJPEG_FRAME_CAP).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    DIB, 224 + 520/frame for MJPEG (frames padded to MJPEG_FRAME_CAP)."""
     from financedatabase_spark.operators.multimodal import synth_avi_mjpeg
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
+    def synth(doc_id: int) -> bytes:
+        return synth_avi(doc_id) if doc_id % 2 == 0 else synth_avi_mjpeg(doc_id)
 
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_avi(int(i))
-                        if int(i) % 2 == 0
-                        else synth_avi_mjpeg(int(i))
-                    ),
-                    "media_type": "video/avi",
-                }
-            )
-
-    avis = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(avis, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id", "n_bytes", F.posexplode("feature").alias("win", "lum_sum")
+    return _synth_decode_features(
+        spark, sf_dir, synth, "video/avi", "n_bytes", ("win", "lum_sum")
     )
 
 
@@ -910,33 +907,12 @@ def multimodal_video_dib_features(spark: SparkSession, sf_dir: str) -> DataFrame
     0 (see `_decode_rle8`/`_decode_rle4`). The oracle recomputes every
     per-frame palette-expanded pixel sum from the fixture formulas, so
     wrong palette routing, reserved-byte leakage, or any RLE walk error
-    (run placement, absolute-mode padding, delta zero-fill) mismatches.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    (run placement, absolute-mode padding, delta zero-fill) mismatches."""
     from financedatabase_spark.operators.multimodal import synth_avi_dib
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_avi_dib(int(i))),
-                    "media_type": "video/avi",
-                }
-            )
-
-    avis = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(avis, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 4).cast("int").alias("variant"),
-        F.posexplode("feature").alias("win", "px_sum"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_avi_dib, "video/avi",
+        (F.col("doc_id") % 4).cast("int").alias("variant"), ("win", "px_sum"),
     )
 
 
@@ -972,31 +948,10 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     must parse the chunk stream, inflate IDAT, invert the filters, and
     emit the 8-bin normalized luminance histogram. The oracle recomputes
     the histogram from the pixel-synthesis formula — a decoder that
-    mis-parses geometry or shortcuts the un-filter step cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_png(int(i))),
-                    "media_type": "image/png",
-                }
-            )
-
-    pngs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(pngs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 3 * 4 + 8).cast("long").alias("width"),
-        F.posexplode("feature").alias("pos", "x"),
+    mis-parses geometry or shortcuts the un-filter step cannot match."""
+    return _synth_decode_features(
+        spark, sf_dir, synth_png, "image/png",
+        (F.col("doc_id") % 3 * 4 + 8).cast("long").alias("width"), ("pos", "x"),
     )
 
 
@@ -1087,31 +1042,10 @@ def multimodal_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     luminance histogram — and, for the color docs, the mean-Cb/mean-Cr
     features at pos 8/9 — from the synthesis formula. A decoder that
     mis-parses Huffman tables, the zigzag, the MCU interleave, or either
-    quant table cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),
-        F.posexplode("feature").alias("pos", "x"),
+    quant table cannot match."""
+    return _synth_decode_features(
+        spark, sf_dir, synth_jpeg, "image/jpeg",
+        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"), ("pos", "x"),
     )
 
 
@@ -1148,33 +1082,12 @@ def multimodal_jpeg_lossless_features(spark: SparkSession, sf_dir: str) -> DataF
     recomputes the 8-bin luminance histogram straight from that formula
     — no quantization model. A decoder that mis-parses any predictor,
     the boundary prediction rules (first line Ra, first column Rb,
-    first sample 2^(P-1)), or the difference coding cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    first sample 2^(P-1)), or the difference coding cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_lossless
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg_lossless(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_jpeg_lossless, "image/jpeg",
+        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"), ("pos", "x"),
     )
 
 
@@ -1200,38 +1113,18 @@ def multimodal_jpeg_lossless_features(spark: SparkSession, sf_dir: str) -> DataF
 def multimodal_jpeg12_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deep-image features through the 12-BIT extended-sequential JPEG
     path (SOF1 at precision 12 — operators/jpeg.synth_jpeg12 /
-    jpeg_decode_deep): DC-only constant blocks whose dequantized IDCT
+    jpeg_decode): DC-only constant blocks whose dequantized IDCT
     is exactly dc + 2048 (quantizer 8 at DC, level shift 2^11), pixels
     spanning [548, 4047] of the 12-bit range, histogram binned by
     v*8 // 4096. The decoder must honor the SOF precision in the level
     shift and clamp — an 8-bit-assuming decoder clamps everything to
     255 and lands the whole mass in bin 0. The oracle recomputes the
-    deep histogram from the block formula.
+    deep histogram from the block formula."""
+    from financedatabase_spark.operators.jpeg import synth_jpeg12
 
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
-    from financedatabase_spark.operators.jpeg import jpeg_decode_deep, synth_jpeg12
-
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg12(int(i))),
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary")
-    feats = decode_features(jpgs, decode_fn=jpeg_decode_deep)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_jpeg12, "image/jpeg",
+        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"), ("pos", "x"),
     )
 
 
@@ -1303,33 +1196,12 @@ def multimodal_jpeg_exotic_features(spark: SparkSession, sf_dir: str) -> DataFra
     walking the wrong MCU shape cannot match. The scan layout cycles
     (doc%20//5) over all THREE sequential layouts of the same pixels —
     fully interleaved, non-interleaved, and PARTIALLY interleaved
-    (Y-only scan + one Cb+Cr subset scan, T.81 A.2.3).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    (Y-only scan + one Cb+Cr subset scan, T.81 A.2.3)."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_exotic
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg_exotic(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_jpeg_exotic, "image/jpeg",
+        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"), ("pos", "x"),
     )
 
 
@@ -1382,35 +1254,12 @@ def multimodal_jpeg_lossless_rgb_features(spark: SparkSession, sf_dir: str) -> D
     recomputes the luma histogram (12-bit binning, v*8 >> 12) and the
     two chroma means from the formula exactly; a decoder that ignored
     the point transform, mixed up scan-to-component routing, or
-    returned after the first scan cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    returned after the first scan cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_lossless_rgb
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_jpeg_lossless_rgb(int(i))
-                    ),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 3).cast("int").alias("al"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_jpeg_lossless_rgb, "image/jpeg",
+        (F.col("doc_id") % 3).cast("int").alias("al"), ("pos", "x"),
     )
 
 
@@ -1466,35 +1315,12 @@ def multimodal_jpeg_lossless_arith_features(spark: SparkSession, sf_dir: str) ->
     plane equals the synthesis formula shifted by Al — so the oracle
     recomputes the luma histogram and chroma means exactly; a decoder
     with a wrong context mapping, a missed statistics reset at a
-    restart, or a broken point transform cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    restart, or a broken point transform cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_lossless_arith
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_jpeg_lossless_arith(int(i))
-                    ),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 3).cast("int").alias("al"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_jpeg_lossless_arith, "image/jpeg",
+        (F.col("doc_id") % 3).cast("int").alias("al"), ("pos", "x"),
     )
 
 
@@ -1568,33 +1394,12 @@ def multimodal_jpeg_hier_features(spark: SparkSession, sf_dir: str) -> DataFrame
     reconstruction equals the target formula exactly). The oracle
     recomputes the final plane per variant and histograms it; a decoder
     with a wrong expansion rounding, a level-shifted differential IDCT,
-    or broken mod-2^16 refinement arithmetic cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    or broken mod-2^16 refinement arithmetic cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_hier
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg_hier(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 4).cast("int").alias("variant"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_jpeg_hier, "image/jpeg",
+        (F.col("doc_id") % 4).cast("int").alias("variant"), ("pos", "x"),
     )
 
 
@@ -1653,33 +1458,12 @@ def multimodal_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     composited canvas per variant from the palette/index formulas and
     histograms the Rec.601 integer luma — a decoder with a broken LZW
     width bump, interlace order, transparency skip, or disposal
-    restore cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    restore cannot match."""
     from financedatabase_spark.operators.gif import synth_gif
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_gif(int(i))),
-                    "media_type": "image/gif",
-                }
-            )
-
-    gifs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(gifs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 4).cast("int").alias("variant"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_gif, "image/gif",
+        (F.col("doc_id") % 4).cast("int").alias("variant"), ("pos", "x"),
     )
 
 
@@ -1743,33 +1527,12 @@ def multimodal_tiff_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the per-variant RGB from the fixture formulas and
     histograms the Rec.601 integer luma — a decoder with the GIF-style
     late width change, a missed predictor accumulation, a strip-state
-    leak, or an un-inverted WhiteIsZero cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    leak, or an un-inverted WhiteIsZero cannot match."""
     from financedatabase_spark.operators.tiff import synth_tiff
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_tiff(int(i))),
-                    "media_type": "image/tiff",
-                }
-            )
-
-    tifs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(tifs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 4).cast("int").alias("variant"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_tiff, "image/tiff",
+        (F.col("doc_id") % 4).cast("int").alias("variant"), ("pos", "x"),
     )
 
 
@@ -1828,33 +1591,12 @@ def multimodal_webp_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverse transforms, and per-block code-group selection sit on the
     oracle path: the complete VP8L bitstream. Decode is lossless, so
     the oracle recomputes each variant's RGB from the fixture formulas
-    and histograms the Rec.601 integer luma.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    and histograms the Rec.601 integer luma."""
     from financedatabase_spark.operators.webp import synth_webp
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_webp(int(i))),
-                    "media_type": "image/webp",
-                }
-            )
-
-    webps = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(webps, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 9).cast("int").alias("variant"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_webp, "image/webp",
+        (F.col("doc_id") % 9).cast("int").alias("variant"), ("pos", "x"),
     )
 
 
@@ -1913,33 +1655,12 @@ def multimodal_bmp_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinate formulas and histograms the Rec.601 integer luma (a
     histogram is orientation-invariant, so the bottom-up/top-down row
     order is pinned by the exact-pixel unit test, not here; palette
-    routing, RLE walks, and the reserved-byte skip are oracle-visible).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    routing, RLE walks, and the reserved-byte skip are oracle-visible)."""
     from financedatabase_spark.operators.multimodal import synth_bmp_file
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_bmp_file(int(i))),
-                    "media_type": "image/bmp",
-                }
-            )
-
-    bmps = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(bmps, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 4).cast("int").alias("variant"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_bmp_file, "image/bmp",
+        (F.col("doc_id") % 4).cast("int").alias("variant"), ("pos", "x"),
     )
 
 
@@ -1995,33 +1716,12 @@ def multimodal_ico_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     with 0xAA reserved bytes and a clear mask. The oracle recomputes
     each variant's luma — PNG luma is the synth_png formula directly —
     so wrong mask bit order, palette routing, or doubled-height parsing
-    mismatches.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    mismatches."""
     from financedatabase_spark.operators.multimodal import synth_ico
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_ico(int(i))),
-                    "media_type": "image/x-icon",
-                }
-            )
-
-    icos = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(icos, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 3).cast("int").alias("variant"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_ico, "image/x-icon",
+        (F.col("doc_id") % 3).cast("int").alias("variant"), ("pos", "x"),
     )
 
 
@@ -2081,31 +1781,11 @@ def multimodal_adpcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified, not just the container shape. The recursion is
     per-sample, so like the tick-bar oracles this baseline is excluded
     from the 50x sweeps — the Spark side stays linear (one mapInPandas
-    decode).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    decode)."""
     from financedatabase_spark.operators.multimodal import synth_wav_adpcm
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_wav_adpcm(int(i))),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
+    return _synth_decode_features(
+        spark, sf_dir, synth_wav_adpcm, "audio/wav", "n_bytes", ("win", "abs_sum")
     )
 
 
@@ -2183,31 +1863,11 @@ def multimodal_msadpcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the delta recurrence bounded so the oracle's BIGINT
     arithmetic cannot overflow. Like the IMA and tick-bar oracles the
     per-sample recursion is the BASELINE's cost — excluded from the 50x
-    sweeps — while the Spark side stays linear (one mapInPandas decode).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    sweeps — while the Spark side stays linear (one mapInPandas decode)."""
     from financedatabase_spark.operators.multimodal import synth_wav_msadpcm
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_wav_msadpcm(int(i))),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
+    return _synth_decode_features(
+        spark, sf_dir, synth_wav_msadpcm, "audio/wav", "n_bytes", ("win", "abs_sum")
     )
 
 
@@ -2285,33 +1945,12 @@ def multimodal_jpeg_arith_features(spark: SparkSession, sf_dir: str) -> DataFram
     histogram — and mean-Cb/mean-Cr at pos 8/9 for color docs — in
     closed form; only the entropy layer differs. A decoder with a
     wrong Table D.3 entry, broken conditional exchange, bad byte
-    stuffing, or unreset restart statistics cannot match.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    stuffing, or unreset restart statistics cannot match."""
     from financedatabase_spark.operators.jpeg import synth_jpeg_arith
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_jpeg_arith(int(i))),
-                    "media_type": "image/jpeg",
-                }
-            )
-
-    jpgs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(jpgs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id",
-        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"),
-        F.posexplode("feature").alias("pos", "x"),
+    return _synth_decode_features(
+        spark, sf_dir, synth_jpeg_arith, "image/jpeg",
+        (F.col("doc_id") % 3 * 8 + 16).cast("long").alias("width"), ("pos", "x"),
     )
 
 
@@ -2374,33 +2013,12 @@ def multimodal_adpcm_stereo_features(spark: SparkSession, sf_dir: str) -> DataFr
     by frame, and mirrors the truncating mix — a decoder with swapped
     word order, shared channel state, or a floor-division mix cannot
     match. Per-sample recursion, so 50x sweeps SKIP-list this baseline
-    like the other ADPCM oracles.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    like the other ADPCM oracles."""
     from financedatabase_spark.operators.multimodal import synth_wav_adpcm_stereo
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_wav_adpcm_stereo(int(i))
-                    ),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
+    return _synth_decode_features(
+        spark, sf_dir, synth_wav_adpcm_stereo, "audio/wav",
+        "n_bytes", ("win", "abs_sum"),
     )
 
 
@@ -2477,33 +2095,12 @@ def multimodal_msadpcm_stereo_features(spark: SparkSession, sf_dir: str) -> Data
     mono mix. A decoder with swapped nibble-to-channel routing, shared
     delta state, or field-sequential header parsing cannot match.
     Per-sample recursion, so 50x sweeps SKIP-list this baseline like
-    the other ADPCM oracles.
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    the other ADPCM oracles."""
     from financedatabase_spark.operators.multimodal import synth_wav_msadpcm_stereo
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(
-                        lambda i: synth_wav_msadpcm_stereo(int(i))
-                    ),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
+    return _synth_decode_features(
+        spark, sf_dir, synth_wav_msadpcm_stereo, "audio/wav",
+        "n_bytes", ("win", "abs_sum"),
     )
 
 
@@ -2668,31 +2265,11 @@ def multimodal_gsm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded samples per doc verified bit-exact. Like the ADPCM and
     tick-bar oracles the per-sample recursion is the BASELINE's cost —
     SKIP-listed at 50x — while the Spark side stays linear (one
-    mapInPandas decode).
-
-    Scale shape: scan → mapInPandas synth → mapInPandas decode →
-    posexplode; one id-only shuffle (spread_ids) before synth so decode
-    parallelizes — payloads themselves never shuffle."""
-    import pandas as _pd
-
+    mapInPandas decode)."""
     from financedatabase_spark.operators.multimodal import synth_wav_gsm
 
-    docs = spread_ids(load_table(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda i: synth_wav_gsm(int(i))),
-                    "media_type": "audio/wav",
-                }
-            )
-
-    wavs = docs.mapInPandas(gen, "doc_id long, payload binary, media_type string")
-    feats = decode_features(wavs, decode_fn=dispatch_decode, pass_media_type=True)
-    return feats.select(
-        "doc_id", "n_bytes", F.posexplode("feature").alias("win", "abs_sum")
+    return _synth_decode_features(
+        spark, sf_dir, synth_wav_gsm, "audio/wav", "n_bytes", ("win", "abs_sum")
     )
 
 

@@ -2165,7 +2165,7 @@ def test_jpeg_12bit_extended_sequential():
 
     from financedatabase_spark.operators.jpeg import (
         assemble_jpeg,
-        jpeg_decode_deep,
+        jpeg_decode,
         jpeg_planes,
         synth_jpeg12,
     )
@@ -2177,7 +2177,7 @@ def test_jpeg_12bit_extended_sequential():
             dc = (d * 29) % 3000 - 1500 + (b * 37 + d) % 500
             by, bxx = divmod(b, bx)
             assert planes[0][(by * 8) * w + bxx * 8] == dc + 2048
-        feats = jpeg_decode_deep(synth_jpeg12(d))
+        feats = jpeg_decode(synth_jpeg12(d))
         assert abs(sum(feats) - 1.0) < 1e-12 and len(feats) == 8
 
     # 12-bit under the BASELINE marker is rejected (T.81 Table B.2)
