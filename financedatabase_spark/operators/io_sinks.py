@@ -10,13 +10,21 @@ file-backed lakehouse those become:
   side shuffles on the PK only; with a Delta/Iceberg catalog this is
   `MERGE WHEN NOT MATCHED` (documented, not required here),
 - UPDATE/DELETE = declarative read→rewrite: `when(pred, new)` columns or an
-  inverted filter, then overwrite. Non-transactional like any plain-parquet
-  rewrite; the reference's match-count guard (A5) is preserved in the
-  returned report.
+  inverted filter, then an atomic versioned rewrite. The reference's
+  match-count guard (A5) is preserved in the returned report; it is an
+  observed metric (`DataFrame.observe`) of the rewrite's own write job, so a
+  commit runs only the jobs its rewrite needs.
 
-At scale: appends write partitioned files without touching existing data;
-rewrites are partition-overwrite (`partitionOverwriteMode=dynamic`) so an
-UPDATE touching one date rewrites one partition, not the table.
+At scale: appends write partitioned files without touching existing data.
+Every DML commit goes through `ParquetTable.rewrite`, which writes a whole
+new ``_vNNNNNNNN`` version of the table (partitioned like the table) and
+commits it with a pointer swap, so an UPDATE touching one date still rewrites
+every partition. Dynamic partition overwrite, which replaces only the
+partitions present in the written frame, is available only through
+`ParquetTable.write(mode="overwrite")` with
+``spark.sql.sources.partitionOverwriteMode=dynamic`` set, as
+test_dynamic_partition_overwrite does; it writes in place, without the
+versioned commit.
 """
 
 from __future__ import annotations
@@ -28,8 +36,9 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import Protocol
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -231,6 +240,28 @@ class ParquetTable:
     'append')` is append-only file creation and safe alongside readers,
     but racing it against a `rewrite` can strand the appended files in a
     superseded snapshot; route mixed workloads through `rewrite`.
+
+    **Schema memo.** Spark infers a parquet directory's schema with a
+    one-task job on every plain ``spark.read.parquet``. `read` (current
+    table or ``version=N``) infers once per directory and remembers the
+    result in this instance; later reads of that directory pass it to
+    ``spark.read.schema(...)``, which still lists the files afresh but
+    runs no job. `write` (append or overwrite) forgets the directory it
+    writes, and a committed `rewrite` forgets every directory, so the next
+    read infers again. The memo is only ever filled from a read, never
+    from a frame being written: parquet reads come back all-nullable,
+    partition-column types are re-inferred from directory names, and an
+    UPDATE's ``when/otherwise`` can widen a column, so a written frame's
+    schema is not the schema a read returns. The one exception is a
+    partitioned directory left with no rows (`clear_table`, a DELETE of
+    every row, any DML on an emptied table, an empty append to it): Spark
+    writes no data file there, inference is impossible and a plain read
+    fails with ``UNABLE_TO_INFER_SCHEMA``, so the written frame's schema
+    (partition columns last, as a read orders them) is remembered for it.
+    Limits: a fresh instance on such an empty partitioned version still
+    cannot read it until rows are appended; and an append by another
+    instance or process that changes the schema is not seen by an instance
+    that has already read that version — use a fresh instance there.
     """
 
     POINTER = "_CURRENT"
@@ -250,6 +281,8 @@ class ParquetTable:
         # local/NFS paths; object-store deployments inject a conditional-
         # put / catalog-service implementation (see TableLease)
         self.lease: TableLease = lease or DirectoryLease(path, self.LOCK)
+        # inferred read schema per table directory (see "Schema memo")
+        self._schemas: dict[str, StructType] = {}
 
     # -- versioned-layout plumbing ------------------------------------
     def _pointer(self) -> str:
@@ -304,24 +337,29 @@ class ParquetTable:
         earlier version (``version=N`` reads ``_vN``; versions are
         retained when pruning was disabled or has not run). The committed
         pointer always names a complete snapshot, so concurrent readers
-        never observe a partial rewrite."""
-        if version is not None:
-            if version == 0:
-                # version 0 IS the flat pre-rewrite layout — there is no
-                # _v00000000 directory to look for
-                if self._has_flat_files():
-                    return self.spark.read.parquet(self.path)
+        never observe a partial rewrite. A directory's schema is inferred
+        once per instance (see "Schema memo" in the class docstring)."""
+        if version is None:
+            vdir = self._current_dir()
+        elif version == 0:
+            # version 0 IS the flat pre-rewrite layout — there is no
+            # _v00000000 directory to look for
+            if not self._has_flat_files():
                 raise FileNotFoundError(f"version 0 not retained at {self.path}")
-            if version > self._committed_version():
-                # newer dirs are crash orphans from an uncommitted rewrite
-                raise FileNotFoundError(
-                    f"version {version} not committed at {self.path}"
-                )
+            vdir = self.path
+        elif version > self._committed_version():
+            # newer dirs are crash orphans from an uncommitted rewrite
+            raise FileNotFoundError(f"version {version} not committed at {self.path}")
+        else:
             vdir = os.path.join(self.path, f"_v{version:08d}")
             if not os.path.isdir(vdir):
                 raise FileNotFoundError(f"version {version} not retained at {self.path}")
-            return self.spark.read.parquet(vdir)
-        return self.spark.read.parquet(self._current_dir())
+        schema = self._schemas.get(vdir)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(vdir)
+        df = self.spark.read.parquet(vdir)
+        self._schemas[vdir] = df.schema
+        return df
 
     def versions(self) -> list[int]:
         """Retained COMMITTED version numbers, ascending (0 = flat
@@ -343,10 +381,26 @@ class ParquetTable:
         return sorted(out)
 
     def write(self, df: DataFrame, mode: str = "append") -> None:
+        target = self._current_dir()
         w = df.write.mode(mode)
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)
-        w.parquet(self._current_dir())
+        self._schemas.pop(target, None)
+        w.parquet(target)
+        self._remember_if_empty(target, df)
+
+    def _remember_if_empty(self, vdir: str, df: DataFrame) -> None:
+        """After ``df`` was written to ``vdir``: a partitioned directory
+        with no partition subdirectory holds no data file, so its schema
+        cannot be inferred; remember the written one, partition columns
+        last as a read orders them (see "Schema memo")."""
+        if self.partition_by and not any(
+            e.startswith(f"{self.partition_by[0]}=") for e in os.listdir(vdir)
+        ):
+            self._schemas[vdir] = StructType(
+                [f for f in df.schema if f.name not in self.partition_by]
+                + [df.schema[c] for c in self.partition_by]
+            )
 
     def rewrite(
         self, df: DataFrame, retain: int = 1,
@@ -463,6 +517,8 @@ class ParquetTable:
                 f.flush()
                 os.fsync(f.fileno())
             os.replace(tmp, self._pointer())  # <- the commit point
+            self._schemas.clear()
+            self._remember_if_empty(new_dir, df)
 
             # post-commit prune of stale data: best-effort, never part of
             # the transaction (a failure here leaves invisible garbage,
@@ -550,10 +606,13 @@ def update_rewrite(
     every row keeps its value unless the predicate matches
     (reference: dynamic_batch_update, SQLHelpers.py:689-776).
 
-    Returns (rewritten_df, predicate) so the caller can compute the
-    reference's match-count guard with one aggregate."""
+    Returns (rewritten_df, predicate)."""
     pred = eq_predicate(filters)
-    out = df.select(
+    return _set_where(df, pred, updates), pred
+
+
+def _set_where(df: DataFrame, pred: Column, updates: dict[str, Column | object]) -> DataFrame:
+    return df.select(
         *[
             F.when(pred, updates[c] if isinstance(updates[c], Column) else F.lit(updates[c]))
             .otherwise(F.col(c))
@@ -563,7 +622,6 @@ def update_rewrite(
             for c in df.columns
         ]
     )
-    return out, pred
 
 
 def delete_rewrite(
@@ -574,17 +632,36 @@ def delete_rewrite(
     (reference: delete_from_table, SQLHelpers.py:251-358). Null-safe: rows
     where the predicate is NULL survive, matching SQL DELETE."""
     pred = eq_predicate(filters)
-    return df.filter(~F.coalesce(pred, F.lit(False))), pred
+    return _drop_where(df, pred), pred
+
+
+def _drop_where(df: DataFrame, pred: Column) -> DataFrame:
+    return df.filter(~F.coalesce(pred, F.lit(False)))
+
+
+def _observe_matches(df: DataFrame, pred: Column) -> tuple[DataFrame, Observation]:
+    """Attach the reference's match-count guard to ``df`` as an observed
+    metric, so the rewrite job that consumes ``df`` counts the matches
+    while it writes instead of a separate scan. A NULL predicate is no
+    match, as in ``filter(pred).count()``. Read ``obs.get["n"]`` only after
+    `ParquetTable.rewrite` has returned: it blocks until that job ends.
+
+    The DML runners build ``pred`` once and share it between the guard and
+    the rewrite: an IN predicate costs a Py4J call per listed value."""
+    obs = Observation()
+    n = F.count_if(F.coalesce(pred, F.lit(False))).alias("n")
+    return df.observe(obs, n), obs
 
 
 def run_update(
     table: ParquetTable, filters: dict[str, object], updates: dict[str, object]
 ) -> DmlReport:
-    """M1 end-to-end against a ParquetTable, with the count guard."""
-    df = table.read()
-    out, pred = update_rewrite(df, filters, updates)
-    matched = df.filter(pred).count()
-    table.rewrite(out)
+    """M1 end-to-end against a ParquetTable, with the count guard counted
+    by the rewrite's own (single) write job."""
+    pred = eq_predicate(filters)
+    df, obs = _observe_matches(table.read(), pred)
+    table.rewrite(_set_where(df, pred, updates))
+    matched = obs.get["n"]
     return DmlReport(True, rows_matched=matched, rows_affected=matched)
 
 
@@ -592,17 +669,28 @@ def run_delete(
     table: ParquetTable, filters: dict[str, object], dry_run: bool = False
 ) -> DmlReport:
     """M2 end-to-end; ``dry_run`` reports the match count without writing
-    (reference: delete_from_table dry-run mode)."""
+    (reference: delete_from_table dry-run mode). A real delete counts its
+    guard in the rewrite's own write job, like `run_update`."""
     df = table.read()
-    out, pred = delete_rewrite(df, filters)
-    matched = df.filter(F.coalesce(pred, F.lit(False))).count()
-    if not dry_run:
-        table.rewrite(out)
-    return DmlReport(True, rows_matched=matched, rows_affected=0 if dry_run else matched)
+    pred = eq_predicate(filters)
+    if dry_run:
+        matched = df.filter(F.coalesce(pred, F.lit(False))).count()
+        return DmlReport(True, rows_matched=matched, rows_affected=0)
+    df, obs = _observe_matches(df, pred)
+    table.rewrite(_drop_where(df, pred))
+    matched = obs.get["n"]
+    return DmlReport(True, rows_matched=matched, rows_affected=matched)
 
 
 def clear_table(table: ParquetTable) -> DmlReport:
-    """M3 — DELETE FROM t (truncate): overwrite with the empty frame."""
+    """M3 — DELETE FROM t (truncate): overwrite with the empty frame.
+
+    A cleared partitioned table holds no data file, so its schema cannot
+    be inferred; `ParquetTable.rewrite` remembers the pre-clear read
+    schema (which ``limit(0)`` keeps) for the new version, and the table
+    stays readable and writable through this instance. A fresh
+    `ParquetTable` on a cleared partitioned path still cannot infer a
+    schema and fails to read until rows are appended."""
     df = table.read()
     table.rewrite(df.limit(0))
     return DmlReport(True, 0, 0)
@@ -611,13 +699,28 @@ def clear_table(table: ParquetTable) -> DmlReport:
 def dedup_rewrite(table: ParquetTable) -> DmlReport:
     """M4 — whole-table duplicate removal rewrite
     (reference: drop_SQL_Table_Duplicates, SQLHelpers.py:370-405 — read,
-    drop_duplicates, batched replace; here a single overwrite)."""
+    drop_duplicates, batched replace; here a single overwrite).
+
+    One plan: group on every column with a row count, observe the row
+    counts before (sum of the group counts) and after (number of groups)
+    above the shuffle, so both are counted by the write's result stage —
+    a shuffle-map stage re-run after a fetch failure would count twice."""
     df = table.read()
-    before = df.count()
-    out = df.dropDuplicates()
-    after = out.count()
+    cols = df.columns
+    obs = Observation()
+    out = (
+        df.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .observe(
+            obs,
+            F.coalesce(F.sum("__n"), F.lit(0)).alias("before"),
+            F.count(F.lit(1)).alias("after"),
+        )
+        .select(*cols)
+    )
     table.rewrite(out)
-    return DmlReport(True, rows_matched=before, rows_affected=before - after)
+    m = obs.get
+    return DmlReport(True, rows_matched=m["before"], rows_affected=m["before"] - m["after"])
 
 
 def export_jsonl_shards(

@@ -1,10 +1,13 @@
 """Stateful sink + catalog operators (not expressible as SELECT oracles):
 ParquetTable DML round-trips and environment lifecycle over spark.catalog."""
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
 from financedatabase_spark.operators.io_sinks import (
+    DmlReport,
     ParquetTable,
     clear_table,
     dedup_rewrite,
@@ -222,6 +225,152 @@ def test_rewrite_preserves_partition_layout(spark, tmp_path):
     assert not os.path.isdir(os.path.join(t.path, "status=O"))
     got = {(r.id, r.price) for r in t.read().collect()}
     assert got == {(1, 99.0), (2, 20.0), (3, 30.0)}
+
+
+def test_clear_partitioned_table_stays_readable(spark, tmp_path):
+    """A cleared partitioned table holds no data file (Spark writes only
+    _SUCCESS for an empty partitioned frame), so its schema cannot be
+    inferred; the table must still read as empty with the pre-clear schema
+    after DML and an empty append, and read back rows appended later."""
+    t = ParquetTable(spark, str(tmp_path / "pt"), partition_by=["status"])
+    t.write(
+        spark.createDataFrame(
+            [(1, "O", 10.0), (2, "F", 20.0), (2, "F", 20.0)], "id long, status string, price double"
+        ),
+        mode="overwrite",
+    )
+    schema = t.read().schema
+    clear_table(t)
+    df = t.read()
+    assert df.count() == 0 and df.schema == schema
+    assert run_update(t, {"status": "O"}, {"price": 1.0}) == DmlReport(True, 0, 0)
+    assert dedup_rewrite(t) == DmlReport(True, 0, 0)
+    assert run_delete(t, {"id": 1}) == DmlReport(True, 0, 0)
+    t.write(spark.createDataFrame([], "id long, status string, price double"))
+    assert t.read().schema == schema
+    t.write(spark.createDataFrame([(7, "O", 7.0)], "id long, status string, price double"))
+    assert [tuple(r) for r in t.read().collect()] == [(7, 7.0, "O")]
+
+
+# (table rows, partition_by, filters, the same predicate as SQL)
+DML_CASES = {
+    "null_filter_column": (
+        [(1, "O", 1.0), (2, None, 2.0), (3, "O", 3.0), (3, "O", 3.0), (4, "F", 4.0), (5, None, 5.0)],
+        None, {"status": "O"}, "status = 'O'",
+    ),
+    "null_in_list": (
+        [(1, "O", 1.0), (2, None, 2.0), (3, "F", 3.0), (3, "F", 3.0)],
+        None, {"status": ["O", None]}, "status IN ('O', NULL)",
+    ),
+    "no_match": (
+        [(1, "O", 1.0), (2, "F", 2.0), (2, "F", 2.0)], None, {"status": "Z"}, "status = 'Z'",
+    ),
+    "empty": ([], None, {"status": "O"}, "status = 'O'"),
+    "partitioned": (
+        [(1, "O", 1.0), (2, "F", 2.0), (3, "O", 3.0), (3, "O", 3.0), (4, None, 4.0)],
+        ["status"], {"id": [1, 3, 4]}, "id IN (1, 3, 4)",
+    ),
+}
+
+
+def _dml_case(spark, tmp_path, case):
+    """Build the case's table; return it with a driver-held snapshot of its
+    contents (the committed version is pruned by the next rewrite)."""
+    rows, partition_by, filters, where = DML_CASES[case]
+    t = ParquetTable(spark, str(tmp_path / case), partition_by=partition_by)
+    t.write(spark.createDataFrame(rows, "id long, status string, price double"), mode="overwrite")
+    before = t.read()
+    snap = spark.createDataFrame(before.collect(), before.schema)
+    return t, snap, filters, where
+
+
+def _same_rows(got, expected):
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
+
+
+@pytest.mark.parametrize("case", sorted(DML_CASES))
+def test_update_report_exact_under_observation(spark, tmp_path, case):
+    """The UPDATE guard counted inside the rewrite equals an independent
+    count(); rows whose predicate is NULL are not matched and keep their
+    value."""
+    t, snap, filters, where = _dml_case(spark, tmp_path, case)
+    n = snap.filter(where).count()
+    report = run_update(t, filters, {"price": 99.0})
+    assert report == DmlReport(True, rows_matched=n, rows_affected=n)
+    _same_rows(
+        t.read(),
+        snap.withColumn("price", F.when(F.expr(where), F.lit(99.0)).otherwise(F.col("price"))),
+    )
+
+
+@pytest.mark.parametrize("case", sorted(DML_CASES))
+def test_delete_report_exact_under_observation(spark, tmp_path, case):
+    """The DELETE guard counted inside the rewrite equals an independent
+    count(); rows whose predicate is NULL are neither matched nor
+    deleted."""
+    t, snap, filters, where = _dml_case(spark, tmp_path, case)
+    n = snap.filter(where).count()
+    dry = run_delete(t, filters, dry_run=True)
+    assert dry == DmlReport(True, rows_matched=n, rows_affected=0)
+    report = run_delete(t, filters)
+    assert report == DmlReport(True, rows_matched=n, rows_affected=n)
+    _same_rows(t.read(), snap.exceptAll(snap.filter(where)))
+
+
+@pytest.mark.parametrize("case", sorted(DML_CASES))
+def test_dedup_report_exact_under_observation(spark, tmp_path, case):
+    """dedup_rewrite's before/after counts, observed in its single
+    group-by plan, equal independent count()s of the table and of its
+    distinct rows."""
+    t, snap, _, _ = _dml_case(spark, tmp_path, case)
+    n, n_distinct = snap.count(), snap.distinct().count()
+    report = dedup_rewrite(t)
+    assert report == DmlReport(True, rows_matched=n, rows_affected=n - n_distinct)
+    _same_rows(t.read(), snap.distinct())
+
+
+def _jobs_run(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches."""
+    sc = spark.sparkContext
+    group = f"sinks-gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dml_commit_jobs_and_schema_memo(spark, tmp_path):
+    """A repeat read of a committed version runs no schema-inference job;
+    UPDATE and DELETE count their guards inside their one write job; dedup
+    runs only its shuffle and its write; and the memo never outlives the
+    version or write it was inferred for."""
+    t = ParquetTable(spark, str(tmp_path / "pt"), partition_by=["status"])
+    t.write(
+        spark.createDataFrame(
+            [(1, "O", 10), (2, "F", 20), (3, "O", 30), (3, "O", 30)], "id long, status string, qty int"
+        ),
+        mode="overwrite",
+    )
+    t.read()
+    assert _jobs_run(spark, t.read) == 0
+    assert _jobs_run(spark, lambda: run_update(t, {"id": 1}, {"qty": 11})) == 1
+    t.read()
+    assert _jobs_run(spark, lambda: run_delete(t, {"id": 2})) == 1
+    t.read()
+    assert _jobs_run(spark, lambda: dedup_rewrite(t)) <= 2
+
+    assert t.read().schema["qty"].dataType.simpleString() == "int"
+    run_update(t, {"id": 1}, {"qty": 1.5})  # when/otherwise widens int to double
+    assert t.read().schema["qty"].dataType.simpleString() == "double"
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, 1.5, "O"), (3, 30.0, "O")]
+
+    t.write(spark.createDataFrame([(5, "X", "n")], "id long, status string, note string"), mode="overwrite")
+    assert t.read().columns == ["id", "note", "status"]
+    assert [tuple(r) for r in t.read().collect()] == [(5, "n", "X")]
 
 
 def test_concurrent_rewrite_second_writer_loses(table):
